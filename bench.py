@@ -377,8 +377,8 @@ def worker_pids() -> frozenset[int]:
     Workers are forked children of the pyspark daemon and inherit its
     cmdline, so the whole family matches the daemon-module pattern;
     the daemon is the root (parent = the JVM, outside the family) and
-    workers are the members whose parent IS in the family. Validated
-    against the live tree in tools/probe_pool.py (round 12)."""
+    workers are the members whose parent IS in the family (checked
+    against the live process tree, round 12)."""
     fam = {}
     try:
         for d in os.listdir("/proc"):

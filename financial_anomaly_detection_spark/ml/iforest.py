@@ -141,24 +141,7 @@ class IsolationForestModel:
         return self
 
     def _collect_pool(self, df: DataFrame, features_col: str) -> np.ndarray:
-        """Bounded, seeded sample of feature rows to the driver — the
-        only data movement in fit, O(max_pool) at any scale."""
-        arr_col = self._as_array(df, features_col)
-        total = df.count()
-        frac = min(1.0, (self.max_pool * 1.2) / max(total, 1))
-        sample = df.select(arr_col.alias("_x"))
-        if frac < 1.0:
-            sample = sample.sample(fraction=frac, seed=self.seed)
-        sample = sample.limit(self.max_pool)
-        try:
-            # Arrow batch transfer: same rows in the same order as
-            # collect(), minus the per-Row pickle cost (~5x on a
-            # 100k-vector pool).
-            vals = sample.toPandas()["_x"].to_numpy()
-            return np.stack(vals).astype(np.float64) if len(vals) else np.empty((0, 0))
-        except Exception:
-            rows = sample.collect()
-            return np.array([r["_x"] for r in rows], dtype=np.float64)
+        return collect_sample(df, features_col, self.max_pool, self.seed)
 
     @staticmethod
     def _as_array(df: DataFrame, features_col: str) -> Column:
@@ -212,3 +195,24 @@ class IsolationForestModel:
         """sklearn-convention decision score: higher = more normal
         (model_wrapper.py:26-31 consumes this shape)."""
         return F.lit(0.5) - self.score_col(df, features_col)
+
+
+def collect_sample(df: DataFrame, features_col: str, cap: int, seed: int) -> np.ndarray:
+    """Bounded, seeded sample of feature rows to the driver — the only
+    data movement in a scorer's fit, O(cap) at any scale: a seeded
+    Bernoulli sample of ~1.2 * cap rows, then the first ``cap``."""
+    total = df.count()
+    frac = min(1.0, (cap * 1.2) / max(total, 1))
+    sample = df.select(IsolationForestModel._as_array(df, features_col).alias("_x"))
+    if frac < 1.0:
+        sample = sample.sample(fraction=frac, seed=seed)
+    sample = sample.limit(cap)
+    try:
+        # Arrow batch transfer: same rows in the same order as
+        # collect(), minus the per-Row pickle cost (~5x on a
+        # 100k-vector pool).
+        vals = sample.toPandas()["_x"].to_numpy()
+        return np.stack(vals).astype(np.float64) if len(vals) else np.empty((0, 0))
+    except Exception:
+        rows = sample.collect()
+        return np.array([r["_x"] for r in rows], dtype=np.float64)

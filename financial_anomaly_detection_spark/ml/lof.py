@@ -28,7 +28,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from .iforest import IsolationForestModel
+from .iforest import IsolationForestModel, collect_sample
 
 _as_array = IsolationForestModel._as_array
 
@@ -43,14 +43,7 @@ class LOFNoveltyModel:
         self.lrd_train: np.ndarray | None = None
 
     def fit(self, df: DataFrame, features_col: str = "features") -> "LOFNoveltyModel":
-        arr = _as_array(df, features_col)
-        total = df.count()
-        frac = min(1.0, (self.max_train * 1.2) / max(total, 1))
-        sample = df.select(arr.alias("_x"))
-        if frac < 1.0:
-            sample = sample.sample(fraction=frac, seed=self.seed)
-        X = np.array([r["_x"] for r in sample.limit(self.max_train).collect()], dtype=np.float64)
-        return self._fit_reference(X)
+        return self._fit_reference(collect_sample(df, features_col, self.max_train, self.seed))
 
     def fit_pool(self, pool: np.ndarray) -> "LOFNoveltyModel":
         """Fit from an already-collected sample pool (shared with the

@@ -1,19 +1,22 @@
 """Named query registry — the engine's public query corpus.
 
-Split into per-family modules in round 10 (the monolith had grown to
-16.6k lines); the public surface is unchanged: REGISTRY, queries(),
-oracle_sql(), load_table and every helper import exactly as before
-via ``financial_anomaly_detection_spark.queries``. Family modules
-register their queries on import; ordering.py holds the driver
-window priority lists.
+Family modules register their queries on import; the public surface
+is REGISTRY, queries(), oracle_sql(), load_table and every helper,
+imported via ``financial_anomaly_detection_spark.queries``.
+``queries()`` lists every oracle-backed query in registration order,
+then every rows-only query in registration order.
 """
 
 from __future__ import annotations
 
-from .common import *  # noqa: F401,F403
+from collections.abc import Callable
 
-# Import order = REGISTRY registration order (the driver window's
-# first 50 slots are pinned by ordering._PRIORITY_* regardless).
+from pyspark.sql import DataFrame, SparkSession
+
+from .common import *  # noqa: F401,F403
+from .common import REGISTRY
+
+# Import order = REGISTRY registration order.
 from . import relational  # noqa: F401,E402
 from . import profiles_scoring  # noqa: F401,E402
 from . import ml_eval  # noqa: F401,E402
@@ -25,4 +28,12 @@ from . import multimodal  # noqa: F401,E402
 from . import product_analytics  # noqa: F401,E402
 from . import storage_layout  # noqa: F401,E402
 
-from .ordering import *  # noqa: F401,F403,E402
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    oracle_backed = {n: s.fn for n, s in REGISTRY.items() if s.oracle is not None}
+    rows_only = {n: s.fn for n, s in REGISTRY.items() if s.oracle is None}
+    return {**oracle_backed, **rows_only}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {n: s.oracle for n, s in REGISTRY.items() if s.oracle is not None}

@@ -606,19 +606,18 @@ def _ed1_candidate_pairs(names: DataFrame, name_col: str = "name") -> DataFrame:
     deduplicated: a pair can meet under several shared variants, so
     callers verify levenshtein and then ``distinct()`` — verify-first
     keeps the dedup shuffle to true matches only (r12).
+
+    The deletion variants are built with the column API, not SQL text,
+    so a ``name_col`` that needs quoting (``full name``) plans as-is.
     """
+    name = F.col(name_col)
+    deletions = F.transform(
+        F.sequence(F.lit(1), F.length(name)),
+        lambda i: F.concat(F.substr(name, F.lit(1), i - 1), F.substr(name, i + 1)),
+    )
     variants = names.select(
-        F.col(name_col).alias("_n"),
-        F.explode(
-            F.array_union(
-                F.array(F.col(name_col)),
-                F.expr(
-                    f"transform(sequence(1, length({name_col})), "
-                    f"i -> concat(substr({name_col}, 1, i - 1), "
-                    f"substr({name_col}, i + 1)))"
-                ),
-            )
-        ).alias("variant"),
+        name.alias("_n"),
+        F.explode(F.array_union(F.array(name), deletions)).alias("variant"),
     )
     groups = (
         variants.groupBy("variant")

@@ -257,3 +257,12 @@ def test_ed1_pair_expansion_streams_hot_variant_group(spark):
     # the distinct candidate set is exactly the C(1000,2) sorted pairs
     assert cand.filter("name_a >= name_b").count() == 0
     assert cand.distinct().count() == 1000 * 999 // 2
+
+    # a name column that needs quoting plans and gives the same set
+    few = spark.createDataFrame(
+        [(n,) for n in names[:40] + ["", "a", "ab", "abc", "xbc"]], "name string"
+    )
+    quoted = few.withColumnRenamed("name", "full name")
+    assert set(_ed1_candidate_pairs(quoted, "full name").collect()) == set(
+        _ed1_candidate_pairs(few).collect()
+    )

@@ -70,6 +70,21 @@ def test_lof_ranks_planted_anomalies(spark, planted):
     assert 0.9 < med < 1.2
 
 
+@pytest.mark.parametrize("max_train", [5000, 200])
+def test_lof_reference_set_is_the_seeded_row_sample(spark, planted, max_train):
+    """The shared Arrow collector gives LOF the same reference set, row
+    for row, as a seeded sample + limit + Row collect of the vectors."""
+    model = LOFNoveltyModel(max_train=max_train, seed=42).fit(planted, "vec")
+    frac = min(1.0, max_train * 1.2 / planted.count())
+    sample = planted.select(F.col("vec").alias("_x"))
+    if frac < 1.0:
+        sample = sample.sample(fraction=frac, seed=42)
+    rows = sample.limit(max_train).collect()
+    expected = np.array([r["_x"] for r in rows], dtype=np.float64)
+    assert model.X_train.shape == expected.shape
+    assert np.array_equal(model.X_train, expected)
+
+
 def test_reconstruction_ranks_planted_anomalies(spark, planted):
     # rank-2 structure + off-plane anomalies
     rng = np.random.default_rng(11)

@@ -619,16 +619,41 @@ def test_quantile_knot_stage_prunes_events_scan(spark, sf_dir):
 # generate-carrying representatives of every family that reads
 # parquet directly (the checkpoint-hidden ones are covered by their
 # pre-checkpoint builder guards above): re-enabling the rule must not
-# change any scan's PushedFilters or ReadSchema.
+# change any scan's PushedFilters or ReadSchema. Every representative
+# must actually scan parquet, or its comparison is vacuous.
 
-_GENERATE_REPRESENTATIVES = [
-    "jaccard_pairs_prefix_filter",   # shingle explode over documents
-    "duplicate_chunks_across_docs",  # gram explode over documents
-    "feature_hashing_docs",          # token explode over documents
-    "longest_dup_span_pairs",        # positional-gram explode
-    "fuzzy_name_pairs_ed1",          # deletion-variant explode (customer)
-    "explode_type_matrix",           # array explode over events
-]
+
+def _prefix_filter_shingle_explode(spark, sf_dir):
+    """jaccard_pairs_prefix_filter pins its shingle-array frame before
+    the explode, so the query's final plan has no parquet scan; plan the
+    pre-checkpoint shingle frame with the same explode on top instead."""
+    from pyspark.sql import functions as F
+
+    from financial_anomaly_detection_spark.operators.dedup import (
+        _shingle_arrays,
+    )
+    from financial_anomaly_detection_spark.queries.common import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    arrs = _shingle_arrays(docs, "doc_id", "text", 3)
+    return arrs.select("_id", F.explode("_arr").alias("_sh"))
+
+
+_GENERATE_REPRESENTATIVES = {
+    "jaccard_pairs_prefix_filter": _prefix_filter_shingle_explode,  # shingle explode over documents
+    "duplicate_chunks_across_docs": None,  # gram explode over documents
+    "feature_hashing_docs": None,          # token explode over documents
+    "longest_dup_span_pairs": None,        # positional-gram explode
+    "fuzzy_name_pairs_ed1": None,          # deletion-variant explode (customer)
+    "explode_type_matrix": None,           # array explode over events
+}
+
+
+def _representative_plan(spark, name, sf_dir):
+    build = _GENERATE_REPRESENTATIVES[name] or REGISTRY[name].fn
+    return build(spark, sf_dir)._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
 
 
 def _scan_pushdown_facts(plan: str) -> list[tuple[str, str]]:
@@ -652,17 +677,18 @@ def test_generate_filter_inference_not_needed_for_scan_pruning(spark, sf_dir):
 
     excluded_plans = {}
     for name in _GENERATE_REPRESENTATIVES:
-        plan = _plan(spark, name, sf_dir)
+        plan = _representative_plan(spark, name, sf_dir)
         assert "Generate" in plan, (
             f"{name} no longer carries a Generate node — replace it in "
             "_GENERATE_REPRESENTATIVES to keep the family covered"
         )
         excluded_plans[name] = _scan_pushdown_facts(plan)
+        assert excluded_plans[name], f"{name}: plan has no parquet scan"
     key = "spark.sql.optimizer.excludedRules"
     try:
         spark.conf.set(key, "")
         for name in _GENERATE_REPRESENTATIVES:
-            with_rule = _scan_pushdown_facts(_plan(spark, name, sf_dir))
+            with_rule = _scan_pushdown_facts(_representative_plan(spark, name, sf_dir))
             assert with_rule == excluded_plans[name], (
                 f"{name}: scan pushdown differs with InferFiltersFromGenerate "
                 f"re-enabled — a generator input has become scan-prunable and "

@@ -20,6 +20,13 @@ ORACLE_QUERIES = [n for n, s in REGISTRY.items() if s.oracle is not None]
 ROWS_ONLY_QUERIES = [n for n, s in REGISTRY.items() if s.oracle is None]
 
 
+def test_queries_order_is_oracle_backed_then_rows_only():
+    from financial_anomaly_detection_spark.queries import oracle_sql, queries
+
+    assert list(queries()) == ORACLE_QUERIES + ROWS_ONLY_QUERIES
+    assert set(oracle_sql()) == set(ORACLE_QUERIES)
+
+
 @pytest.fixture(scope="module")
 def duck(sf_dir):
     con = duck_connection(sf_dir)

@@ -31,6 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import force  # noqa: E402
 from financial_anomaly_detection_spark.operators.graph import (  # noqa: E402
     connected_components,
 )
@@ -39,10 +40,6 @@ from financial_anomaly_detection_spark.sources.readers import load_table  # noqa
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OFFSET = 10_000_000
-
-
-def force(df):
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:

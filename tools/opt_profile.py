@@ -28,22 +28,11 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import force, release_pins  # noqa: E402
 from financial_anomaly_detection_spark.queries import REGISTRY  # noqa: E402
 from financial_anomaly_detection_spark.session import get_spark  # noqa: E402
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def release_pins(spark) -> None:
-    try:
-        for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            jrdd.unpersist(False)
-    except Exception:
-        pass
 
 
 def plan_text(df) -> str:

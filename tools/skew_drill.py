@@ -29,6 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import Window, functions as F
 
+from bench import force
 from financial_anomaly_detection_spark.operators.profiles import salted_group_stats
 from financial_anomaly_detection_spark.session import get_spark
 
@@ -47,10 +48,6 @@ def build_fixture(spark, n_rows: int):
         .repartition(32)
         .localCheckpoint(eager=True)  # measure the aggregation, not range()
     )
-
-
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
