@@ -80,13 +80,13 @@ class AnomalyEnsemble:
     def fit(self, feature_df: DataFrame) -> "AnomalyEnsemble":
         """feature_df must carry the 10 feature columns
         (schemas.FEATURE_COLS shape)."""
-        # Pin the raw feature frame: the MLlib pipeline fit runs one job
-        # per stage (two StringIndexer distincts + the scaler stats
-        # pass), each of which would otherwise replay the upstream
-        # feature prep. persist (not localCheckpoint) so the blocks are
-        # RELEASED when fit returns — all model state lives driver-side
-        # after fitting, and leaked pins slowly squeeze execution memory
-        # in long sessions.
+        # Pin the raw feature frame: the MLlib pipeline fit runs a pass
+        # per fitted stage (one multi-column StringIndexer count + the
+        # scaler stats), each of which would otherwise replay the
+        # upstream feature prep. persist (not localCheckpoint) so the
+        # blocks are RELEASED when fit returns — all model state lives
+        # driver-side after fitting, and leaked pins slowly squeeze
+        # execution memory in long sessions.
         feature_df = _parallelize(feature_df).persist()
         pipeline = build_feature_pipeline(self.numeric_cols, self.categorical_cols)
         try:

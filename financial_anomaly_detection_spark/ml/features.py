@@ -43,10 +43,14 @@ def build_feature_pipeline(
     numeric_cols = numeric_cols or NUMERIC_FEATURES
     categorical_cols = categorical_cols or CATEGORICAL_FEATURES
 
-    indexers = [
-        StringIndexer(inputCol=c, outputCol=f"{c}_idx", handleInvalid="keep")
-        for c in categorical_cols
-    ]
+    # One multi-column indexer: its fit counts every column's labels in
+    # a single pass over the data, where per-column indexers ran one
+    # job each.
+    indexer = StringIndexer(
+        inputCols=categorical_cols,
+        outputCols=[f"{c}_idx" for c in categorical_cols],
+        handleInvalid="keep",
+    )
     ohe = OneHotEncoder(
         inputCols=[f"{c}_idx" for c in categorical_cols],
         outputCols=[f"{c}_vec" for c in categorical_cols],
@@ -63,7 +67,7 @@ def build_feature_pipeline(
         inputCols=["_numeric_scaled"] + [f"{c}_vec" for c in categorical_cols],
         outputCol=output_col,
     )
-    return Pipeline(stages=indexers + [ohe, num_assembler, scaler, final_assembler])
+    return Pipeline(stages=[indexer, ohe, num_assembler, scaler, final_assembler])
 
 
 def prepare_event_features(ev: DataFrame) -> DataFrame:

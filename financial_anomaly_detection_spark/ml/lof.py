@@ -56,6 +56,11 @@ class LOFNoveltyModel:
         return self._fit_reference(np.asarray(pool, dtype=np.float64))
 
     def _fit_reference(self, X: np.ndarray) -> "LOFNoveltyModel":
+        if len(X) < 2:
+            raise ValueError(
+                f"LOFNoveltyModel.fit: {len(X)} reference rows; "
+                "need at least 2 (each row needs a neighbour)"
+            )
         self.X_train = X
         k = min(self.n_neighbors, len(X) - 1)
 

@@ -3,9 +3,27 @@
 Arrow ``pandas_udf`` / ``mapInPandas`` stages inherit the input's
 partitioning, and a small parquet table arrives as ONE file partition —
 which silently serializes a decode or scoring kernel onto one core
-while the other 31 idle. ``spread_narrow`` widens such inputs to the
+while the others idle. ``spread_narrow`` widens such inputs to the
 cluster's default parallelism before the Python stage; at real scale
 the scan is already wide and this is a no-op (no exchange added).
+
+The decision is read from the physical plan and never runs it:
+
+* A plan with no exchange (a scan and narrow operators) is not
+  adaptive; its RDD reports the file-partition count without a job.
+* A plan with an exchange is wrapped in ``AdaptiveSparkPlanExec``.
+  Asking its RDD for a partition count makes adaptive query execution
+  run every shuffle stage first — 12 jobs for the training feature
+  frame, all of which ran again when the caller filled its cache. The
+  adaptive node's not-yet-executed plan (after EnsureRequirements, so
+  it carries the hash and range shuffles) names the root partitioning
+  instead, e.g. ``hashpartitioning(user_id, 32)``.
+
+After a shuffle, AQE's parallelism-first coalescing sets the runtime
+count. It goes below ``defaultParallelism`` only for tiny shuffles,
+under about ``coalescePartitions.minPartitionSize`` (1 MB) per core,
+which then run narrower than this rule assumed; that costs little at
+that size and is accepted.
 
 This is the repartition the multimodal module's design notes call for
 ("decode as a mapInPandas stage after a repartition sized so one Arrow
@@ -18,15 +36,35 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+def _planned_partitions(df: DataFrame) -> int | None:
+    """Output partition count ``df``'s physical plan will have, or
+    ``None`` when the plan's root partitioning is unknown. Plans a
+    ``select("*")`` of ``df``: planning ``df``'s own QueryExecution
+    would freeze it, and a later ``df.persist()`` would then never be
+    read back by that same object."""
+    probe = df.select("*")
+    plan = probe._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() != "AdaptiveSparkPlanExec":
+        return probe.rdd.getNumPartitions()
+    partitioning = plan.executedPlan().outputPartitioning()
+    if partitioning.getClass().getSimpleName() == "UnknownPartitioning":
+        return None
+    return partitioning.numPartitions()
+
+
 def spread_narrow(df: DataFrame) -> DataFrame:
-    """Repartition a batch DataFrame up to ``defaultParallelism`` if it
-    has fewer partitions; pass streaming frames through untouched
-    (micro-batch partitioning is the source's concern, and a streaming
-    plan cannot be probed via ``.rdd``)."""
+    """Repartition a batch DataFrame to ``defaultParallelism`` when its
+    physical plan has fewer output partitions, or an unknown root
+    partitioning; runs no Spark job to decide (module docstring). A
+    ``SinglePartition`` root — a global aggregate — counts as 1 and is
+    spread. Streaming frames pass through untouched (micro-batch
+    partitioning is the source's concern, and a streaming plan cannot
+    be probed this way)."""
     if df.isStreaming:
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    n = _planned_partitions(df)
+    if n is None or n < target:
         return df.repartition(target)
     return df
 

@@ -1185,6 +1185,69 @@ def test_sorted_group_map_null_keys_and_carry_of_carry(spark):
     assert got == expect
 
 
+def _wide_and_narrow_scans(spark, tmp_path):
+    """A one-file parquet scan and one read as defaultParallelism
+    partitions."""
+    target = spark.sparkContext.defaultParallelism
+    spark.range(1000).coalesce(1).write.parquet(str(tmp_path / "one"))
+    spark.range(1000).repartition(target).write.parquet(str(tmp_path / "wide"))
+    narrow = spark.read.parquet(str(tmp_path / "one"))
+    wide = spark.read.parquet(str(tmp_path / "wide"))
+    # Counted on a select("*"): .rdd would freeze the frames' own plans.
+    assert narrow.select("*").rdd.getNumPartitions() == 1
+    assert wide.select("*").rdd.getNumPartitions() >= target
+    return narrow, wide
+
+
+def test_spread_narrow_reads_shuffle_plans_without_jobs(spark):
+    """Behind a shuffle the decision comes from the un-executed adaptive
+    plan: asking the RDD for its partition count would make AQE run the
+    shuffle stages first, and the caller's cache fill would run them
+    again."""
+    from financial_anomaly_detection_spark.operators.partitioning import spread_narrow
+    from perfbench.sparkstats import StatusStore
+
+    df = spark.range(10_000).groupBy((F.col("id") % 10).alias("k")).count()
+    window = StatusStore(spark).window().open()
+    out = spread_narrow(df)
+    window.close()
+    assert window.jobs == []
+    # hashpartitioning(k, spark.sql.shuffle.partitions) is wide enough.
+    assert out is df
+
+
+def test_spread_narrow_spreads_single_file_scan_and_global_aggregate(spark, tmp_path):
+    from financial_anomaly_detection_spark.operators.partitioning import spread_narrow
+
+    target = spark.sparkContext.defaultParallelism
+    narrow, wide = _wide_and_narrow_scans(spark, tmp_path)
+    assert spread_narrow(narrow).rdd.getNumPartitions() == target
+    assert spread_narrow(wide) is wide
+    # A SinglePartition root (global aggregate) is narrow too.
+    total = spark.range(10_000).groupBy().count()
+    assert spread_narrow(total).rdd.getNumPartitions() == target
+
+
+def test_spread_narrow_leaves_persist_working(spark, tmp_path):
+    """A frame returned as-is must still read its own cache: planning
+    the caller's QueryExecution to decide would freeze a plan with no
+    InMemoryTableScan in it."""
+    from financial_anomaly_detection_spark.operators.partitioning import spread_narrow
+
+    _, wide = _wide_and_narrow_scans(spark, tmp_path)
+    grouped = spark.range(10_000).groupBy((F.col("id") % 10).alias("k")).count()
+    for df in (wide, grouped):
+        out = spread_narrow(df)
+        assert out is df
+        out.persist()
+        try:
+            out.count()
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "InMemoryTableScan" in plan
+        finally:
+            out.unpersist()
+
+
 def test_worker_pids_reads_live_pool_without_jobs(spark):
     """bench.worker_pids (the pool_turnover telemetry primitive) must
     (a) see the workers a python stage leaves idle-pooled, (b) run NO

@@ -200,6 +200,16 @@ def test_iforest_empty_fit_raises(spark):
         IsolationForestModel(seed=1).fit(empty, "features")
 
 
+@pytest.mark.parametrize("rows", [0, 1])
+def test_lof_fit_too_few_rows_raises(rows):
+    """LOF needs a neighbour per reference row: a 0- or 1-row pool must
+    fail with a ValueError naming the cause, not numpy's zero-size
+    reduction error."""
+    pool = np.arange(rows * 3, dtype=np.float64).reshape(rows, 3)
+    with pytest.raises(ValueError, match="at least 2"):
+        LOFNoveltyModel(seed=1).fit_pool(pool)
+
+
 def test_distributed_lof_bounded_fanout_at_10x(spark):
     """10x the original planted-anomaly scale, clustered geometry: the
     sample-estimated distance cutoff must (a) keep the LSH candidate
