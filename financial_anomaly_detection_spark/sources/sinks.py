@@ -7,8 +7,11 @@ The reference persists one row per scored transaction into MySQL
   * batch: ``write_scores_parquet`` / ``write_scores_jdbc`` — bulk
     appends, partitioned by score date so downstream reads prune.
   * streaming: ``foreach_batch_parquet`` — a foreachBatch hook doing
-    the same bulk append per micro-batch (exactly-once per batch via
-    the streaming checkpoint + idempotent file commits).
+    the same bulk append per micro-batch. This is at-least-once: the
+    append does not look at ``batch_id``, so a batch that Spark replays
+    after a crash (written, but not yet in the commit log) is appended
+    again and its rows are duplicated. An idempotent per-``batch_id``
+    write is ROADMAP direction 5.
 
 JDBC is code-path-complete but exercised only when a JDBC URL is
 supplied (no database ships in the test container).
@@ -45,7 +48,13 @@ def write_scores_jdbc(
 
 def foreach_batch_parquet(path: str):
     """S4, streaming: foreachBatch hook appending each micro-batch to
-    a parquet log — use as ``writeStream.foreachBatch(...)``."""
+    a parquet log — use as ``writeStream.foreachBatch(...)``.
+
+    At-least-once: each row carries its ``batch_id``, but a replayed
+    batch is appended again rather than replacing its earlier write,
+    so readers that need exactly-once must deduplicate on
+    (``batch_id``, key) until the idempotent write of ROADMAP
+    direction 5 lands."""
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         with_sink_timestamp(batch_df).withColumn(

@@ -12,11 +12,10 @@ micro-batch.
 
 Decomposition (the part that matters at scale):
 
-  * per-channel running counts via ``applyInPandasWithState`` keyed on
-    the CHANNEL — state is O(channels), each event is processed once,
-    and the stateful operator is as parallel as the channel
-    cardinality (the heavy per-event work happens before the shuffle,
-    map-side);
+  * per-channel running counts via a streaming ``groupBy().agg()``
+    keyed on the CHANNEL — state is O(channels), each event is
+    processed once, and a partial count runs map-side before the
+    shuffle, so each task ships one row per channel;
   * the chi-square statistic itself touches only the O(channels)-row
     count table, composed in the ``foreachBatch`` sink — deliberately
     tiny, never a per-event computation.
@@ -34,38 +33,25 @@ import math
 from typing import Callable, Iterator, Mapping
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-_COUNT_STATE_SCHEMA = "cnt long"
-_COUNT_OUT_SCHEMA = "channel string, cur_count long"
 
 
 def stateful_channel_counts(
     tx_stream: DataFrame, channel_col: str = "channel"
 ) -> DataFrame:
-    """Running per-channel event counts over the life of the stream.
+    """Running per-channel event counts over the life of the stream,
+    kept by Spark's own streaming aggregation (no Python worker).
 
-    Emits the updated (channel, cur_count) row for every channel seen
-    in each micro-batch (outputMode=update).
+    Emits the updated ``channel string, cur_count long`` row for every
+    channel seen in each micro-batch (outputMode=update); the key
+    column is named ``channel`` whatever ``channel_col`` is. As with
+    ``score_stream.stateful_user_profiles``, a checkpoint written by
+    the earlier pandas group-state form cannot be resumed.
     """
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        cnt = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            cnt += int(len(pdf))
-        state.update((cnt,))
-        yield pd.DataFrame({"channel": [key[0]], "cur_count": [cnt]})
-
-    return tx_stream.groupBy(channel_col).applyInPandasWithState(
-        update,
-        outputStructType=_COUNT_OUT_SCHEMA,
-        stateStructType=_COUNT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return tx_stream.groupBy(
+        F.col(channel_col).cast("string").alias("channel")
+    ).agg(F.count(F.lit(1)).alias("cur_count"))
 
 
 def chisq_quantized(ref_counts: Mapping[str, int], cur_counts: Mapping[str, int]) -> int:
@@ -105,7 +91,7 @@ def drift_sink(
     to a metrics sink, an alert, or a results table. State kept here is
     O(channels); the per-event work already happened upstream.
 
-    Restart safety: the upstream ``applyInPandasWithState`` counts
+    Restart safety: the upstream streaming-aggregation counts
     survive a restart via the stream checkpoint, but outputMode=update
     only re-emits channels SEEN in each batch — so a freshly
     constructed sink would silently treat every not-yet-re-emitted

@@ -1,11 +1,12 @@
 """transformWithState per-user profiles (Spark 4 arbitrary state v2).
 
-``stateful_user_profiles`` (score_stream.py) uses the classic
-``applyInPandasWithState``; this module is the Spark-4-native form on
-``transformWithStateInPandas`` — the API Spark positions as the
-successor: typed state handles (value/list/map), per-key TTL enforced
-BY THE STATE STORE (not user code), timers, and schema'd state that
-survives restarts through the RocksDB state store provider.
+``stateful_user_profiles`` (score_stream.py) keeps the same running
+profile with Spark's built-in streaming aggregation, which needs no
+Python worker. This module is the arbitrary-state form on
+``transformWithStateInPandas``: typed state handles (value/list/map),
+per-key TTL enforced BY THE STATE STORE (not user code), timers, and
+schema'd state that survives restarts through the RocksDB state store
+provider. TTL is what a plain aggregation cannot express.
 
 What it buys this engine at scale:
 
@@ -16,9 +17,11 @@ What it buys this engine at scale:
     ACTIVE keys instead of ever-seen keys. At 100 TB of events with
     ~1e9 lifetime users but ~1e7 active ones, that is the difference
     between a state store that fits and one that doesn't.
-  * the same exact running (sum-in-cents, count) arithmetic as the
-    classic operator — integer cents, so stream==batch parity is
-    bit-exact (asserted in tests/test_streaming_v2.py).
+  * exact running (sum-in-cents, count) arithmetic — integer cents,
+    so stream==batch parity is bit-exact (asserted in
+    tests/test_streaming_v2.py). ``stateful_user_profiles`` sums the
+    double amounts instead, so the two forms agree to floating-point
+    rounding, not bit for bit.
 
 Requires ``spark.sql.streaming.stateStore.providerClass =
 ...RocksDBStateStoreProvider`` (transformWithState rejects the HDFS
@@ -67,8 +70,9 @@ class RunningProfileProcessor(StatefulProcessor):
     """Per-key running (integer-cents sum, count) with optional TTL.
 
     Emits the updated profile row for every key seen in the batch —
-    the same contract as ``stateful_user_profiles`` so the two forms
-    are drop-in interchangeable (and tested against each other).
+    the same output contract as ``stateful_user_profiles`` so the two
+    forms are drop-in interchangeable (each is tested against a batch
+    groupBy; their averages differ by the integer-cents rounding).
     """
 
     def __init__(self, ttl_ms: int | None = None):
@@ -114,7 +118,7 @@ def profile_stream_v2(
             "package (pyspark's state-server protocol); it is not "
             "installed in this environment. Use "
             "streaming.score_stream.stateful_user_profiles (the "
-            "applyInPandasWithState form) instead."
+            "streaming-aggregation form, no TTL) instead."
         )
     spark = tx_stream.sparkSession
     spark.conf.set(

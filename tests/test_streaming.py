@@ -169,6 +169,118 @@ def test_stateful_profiles_accumulate_across_batches(spark, tmp_path):
     assert abs(c100["cust_avg_amount"] - (12000.0 + 150.0 + 300.0) / 3) < 1e-9
 
 
+def test_stateful_profile_and_count_plans_stay_in_the_jvm(spark, tmp_path):
+    """Both running-total operators are Spark's own streaming
+    aggregation: the state lives in a StateStoreSave and no key's rows
+    go through a Python worker."""
+    import contextlib
+    import io
+
+    from perfbench.sparkstats import PYTHON_NODE
+
+    from financial_anomaly_detection_spark.streaming.drift import stateful_channel_counts
+
+    src = tmp_path / "plan_src"
+    src.mkdir()
+    stream = spark.readStream.schema(TRANSACTION_SCHEMA).json(str(src))
+    for op in (stateful_user_profiles, stateful_channel_counts):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            op(stream).explain()
+        plan = buf.getvalue()
+        assert "StateStoreSave" in plan, (op.__name__, plan)
+        assert not PYTHON_NODE.search(plan), (op.__name__, plan)
+
+
+def _run_profiles(spark, tmp_path, schema, batches, name):
+    """Stream ``batches`` (lists of JSON-able dicts, one file each, in
+    list order) through stateful_user_profiles and return each
+    customer's last emitted row (counts only grow, so the last emit
+    is the one with the largest count)."""
+    src = tmp_path / f"{name}_src"
+    src.mkdir()
+    for i, rows in enumerate(batches):
+        p = src / f"b{i}.json"
+        with open(p, "w") as f:
+            for r in rows:
+                f.write(json.dumps(r) + "\n")
+        os.utime(p, (1_700_000_000 + i * 10,) * 2)
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(str(src))
+    q = (
+        stateful_user_profiles(stream)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / f"{name}_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    final = {}
+    for r in spark.sql(f"select * from {name}").collect():
+        if r["customer_id"] not in final or r["cust_txn_count"] > final[r["customer_id"]]["cust_txn_count"]:
+            final[r["customer_id"]] = r
+    return final
+
+
+def test_stateful_profiles_count_null_amount_as_zero(spark, tmp_path):
+    """With no validity split upstream, a null amount adds 0 to the
+    running sum but still counts as a row: each customer's last
+    emitted (avg x count, count) equals a batch groupBy using
+    coalesce(amount, 0) and count(1)."""
+
+    def tx(tid, cust, amount):
+        return {"transaction_id": tid, "timestamp": "2025-05-01T08:00:00Z",
+                "customer_id": cust, "merchant_id": "501", "amount": amount,
+                "channel": "pos", "location": "Harare"}
+
+    batches = [
+        [tx("1", "100", 12000.0), tx("2", "100", 150.0), tx("3", "101", 800.0)],
+        [tx("4", "100", None), tx("5", "102", 70.25)],
+        [tx("6", "100", 300.0), tx("7", "101", 0.1)],
+    ]
+    final = _run_profiles(spark, tmp_path, TRANSACTION_SCHEMA, batches, "profiles_null_amount")
+
+    rows = [r for b in batches for r in b]
+    expected = (
+        spark.createDataFrame(rows, TRANSACTION_SCHEMA)
+        .groupBy("customer_id")
+        .agg(
+            F.sum(F.coalesce(F.col("amount"), F.lit(0.0))).alias("e_sum"),
+            F.count(F.lit(1)).alias("e_cnt"),
+        )
+        .collect()
+    )
+    assert len(final) == len(expected) == 3
+    for e in expected:
+        got = final[e["customer_id"]]
+        assert got["cust_txn_count"] == e["e_cnt"]
+        s_sum = got["cust_avg_amount"] * got["cust_txn_count"]
+        assert abs(s_sum - e["e_sum"]) <= 1e-9 * max(abs(e["e_sum"]), 1.0)
+    # the null row is counted: customer 100 has 4 rows, 3 amounts
+    assert final["100"]["cust_txn_count"] == 4
+    assert abs(final["100"]["cust_avg_amount"] - (12000.0 + 150.0 + 300.0) / 4) < 1e-9
+
+
+def test_stateful_profiles_string_amounts_non_numeric_add_zero(spark, tmp_path):
+    """A string amount column (schema-on-read without a double cast):
+    numeric strings add their value; non-numeric, 'NaN' and null add 0
+    and still count, and a bad string does not fail the query."""
+    schema = "transaction_id string, customer_id string, amount string"
+    batches = [
+        [{"transaction_id": "1", "customer_id": "100", "amount": "12.5"},
+         {"transaction_id": "2", "customer_id": "100", "amount": "abc"}],
+        [{"transaction_id": "3", "customer_id": "100", "amount": "NaN"},
+         {"transaction_id": "4", "customer_id": "101", "amount": None},
+         {"transaction_id": "5", "customer_id": "101", "amount": "7"}],
+    ]
+    final = _run_profiles(spark, tmp_path, schema, batches, "profiles_string_amount")
+    assert final["100"]["cust_txn_count"] == 3
+    assert abs(final["100"]["cust_avg_amount"] - 12.5 / 3) < 1e-9
+    assert final["101"]["cust_txn_count"] == 2
+    assert abs(final["101"]["cust_avg_amount"] - 3.5) < 1e-9
+
+
 def test_watermark_drops_late_rows(spark, tmp_path):
     """W4: an event arriving after the (checkpointed) watermark has
     advanced past it is dropped — the documented divergence from the

@@ -1,8 +1,8 @@
 """transformWithState (Spark 4 state v2) and Python DataSource tests.
 
-The v2 stateful operator must agree with both the classic
-applyInPandasWithState operator and the plain batch aggregation on the
-same data — stream == batch parity in integer-cents exact arithmetic.
+The v2 stateful operator must agree with the plain batch aggregation
+on the same data — stream == batch parity in integer-cents exact
+arithmetic.
 The Python DataSource must be deterministic and partition-parallel.
 """
 
@@ -48,7 +48,7 @@ def _write_batches(src, batches):
 def test_transform_with_state_unavailable_raises_clearly(spark):
     """Without protobuf the raw API dies with an opaque 'driver worker
     crashed'; our wrapper must fail fast with the actionable message
-    (and point at the applyInPandasWithState fallback)."""
+    (and point at the streaming-aggregation fallback)."""
     from financial_anomaly_detection_spark.streaming import stateful_v2 as sv2
 
     if sv2.TWS_AVAILABLE:
@@ -65,7 +65,7 @@ def test_transform_with_state_profiles_match_batch(spark, tmp_path):
         pytest.skip(
             "transformWithStateInPandas needs the protobuf package "
             "(absent in this container; no installs allowed) — "
-            "stateful parity is covered by the applyInPandasWithState "
+            "stateful parity is covered by the streaming-aggregation "
             "form in test_streaming.py"
         )
     profile_stream_v2 = sv2.profile_stream_v2
